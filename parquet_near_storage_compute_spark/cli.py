@@ -38,19 +38,26 @@ from parquet_near_storage_compute_spark.plans.metrics import (
 )
 
 
-def _parse_filter_for_pruning(expr: str) -> list[tuple[str, str, float]]:
-    """Extract simple top-level AND'ed comparisons for metadata pruning
-    (the v2 grammar is exactly this shape, ``v2/src/main.rs:737``)."""
+def _parse_filter_for_pruning(
+    expr: str,
+) -> tuple[list[tuple[str, str, float]], list[str]]:
+    """Split the top-level AND'ed conjuncts into the simple comparisons
+    metadata pruning uses (the v2 grammar is exactly this shape,
+    ``v2/src/main.rs:737``) and the conjuncts that are not of that shape."""
     import re
 
-    out = []
+    out, rest = [], []
     for part in re.split(r"(?i)\s+and\s+", expr):
         m = re.match(
-            r"^\s*([A-Za-z0-9_]+)\s*(<=|>=|==|<|>)\s*(-?[0-9.]+)\s*$", part
+            r"^\s*([A-Za-z0-9_]+)\s*(<=|>=|==|<|>)\s*"
+            r"(-?[0-9]+\.?[0-9]*|-?\.[0-9]+)\s*$",
+            part,
         )
         if m:
             out.append((m.group(1), m.group(2), float(m.group(3))))
-    return out
+        else:
+            rest.append(part.strip())
+    return out, rest
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -114,9 +121,22 @@ def main(argv: list[str] | None = None) -> int:
         threshold = LADDER[args.workload or "p50"]
         filter_expr = f"{args.column} > {threshold}"
 
-    pruning_pred = _parse_filter_for_pruning(filter_expr)
+    pruning_pred, unprunable = _parse_filter_for_pruning(filter_expr)
 
     if args.mode == "metadata":
+        # every conjunct must reach the accounting: one it cannot use
+        # would leave the bytes unfiltered, a different answer
+        if unprunable:
+            print(
+                json.dumps(
+                    {
+                        "error": "conjunct not usable for metadata pruning: "
+                        f"{unprunable[0]!r}"
+                    }
+                ),
+                file=sys.stderr,
+            )
+            return 2
         # v2: no execution at all — footer + surviving chunk accounting.
         # --columns (the v1 -cc axis) applies here too (r8, VERDICT r7
         # #4): the accounted scan set is the first N schema columns, read

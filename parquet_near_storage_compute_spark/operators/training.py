@@ -272,9 +272,11 @@ def decontaminate_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     no matter how common the gram is on the eval side (boilerplate grams
     trim aggressively, which is the conservative direction for
     decontamination). Scale shape is `text_dedup_trim`'s: md5 window
-    hashes as shuffle keys, flagged starts UNIONED into the per-word
-    stream as kind=1 rows, coverage one rolling-max RANGE window over
-    the dense per-doc positions (r13 — no (doc_id, p) equi-join).
+    hashes as shuffle keys, the flagged window starts left-joined onto
+    the per-word positions on (doc_id, p), coverage one rolling-max ROWS
+    window over the dense per-doc positions (r13 dropped only the
+    redundant `.distinct()` on the flagged starts; the join and the ROWS
+    frame remain).
     Output: train docs only, with before/after token accounting and the
     member-level kept-text md5."""
     from parquet_near_storage_compute_spark.tables import fan_out

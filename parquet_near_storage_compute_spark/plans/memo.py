@@ -16,8 +16,8 @@ identical deterministic work, measured at 3-4 s per query in BENCH_DETAIL
 - session: ``applicationId`` + the id() of the live SparkSession — a new
   or restarted session never sees another session's frames (their
   checkpoint RDDs die with the old context);
-- corpus identity: realpath of sf_dir plus an mtime_ns/size fingerprint
-  of the source table (file, or directory of part files) — a test that
+- corpus identity: realpath of sf_dir plus ``tables.path_fingerprint``
+  of each source table (file, or directory of part files) — a test that
   overwrites its tmp corpus invalidates automatically, exactly like the
   /tmp/pnsc_sources derived-copy cache;
 - label: the subframe family (component labels, BPE doc counts, ...).
@@ -41,7 +41,7 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
-from parquet_near_storage_compute_spark.tables import table_path
+from parquet_near_storage_compute_spark.tables import path_fingerprint, table_path
 
 #: Frames kept alive per PlanMemo (LRU). Sized for one corpus × every
 #: label a module registers (similarity carries 6) plus a couple of test
@@ -54,25 +54,11 @@ _CAP = 16
 def _fingerprint(
     sf_dir: str, tables: tuple[str, ...], extra_paths: tuple[str, ...] = ()
 ) -> tuple:
-    """(table, mtime_ns, size) per source — directories of part files
-    fold in each child so an in-place rewrite is always visible."""
-    parts: list[tuple] = []
+    """``path_fingerprint`` per source table and extra path."""
     paths = [(t, table_path(sf_dir, t)) for t in tables] + [
         (p, p) for p in extra_paths
     ]
-    for t, p in paths:
-        try:
-            st = os.stat(p)
-        except OSError:
-            parts.append((t, "missing"))
-            continue
-        if os.path.isdir(p):
-            for name in sorted(os.listdir(p)):
-                cst = os.stat(os.path.join(p, name))
-                parts.append((t, name, cst.st_mtime_ns, cst.st_size))
-        else:
-            parts.append((t, st.st_mtime_ns, st.st_size))
-    return tuple(parts)
+    return tuple((t, path_fingerprint(p) or "missing") for t, p in paths)
 
 
 class PlanMemo:

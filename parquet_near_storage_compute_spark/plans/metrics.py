@@ -244,7 +244,13 @@ def measure_runtime_bytes(spark: SparkSession, action) -> int:
 
     Attribution still requires the session to be otherwise idle only in
     the weak sense that concurrent jobs must not share the group id —
-    unrelated concurrent work no longer pollutes the counter."""
+    unrelated concurrent work no longer pollutes the counter.
+
+    The status store is filled by the asynchronous listener bus, so the
+    action can return before its job-start events are applied. The bus is
+    drained and the group's job ids, stage ids and bytes are re-read on
+    every pass until two passes agree and none of its jobs runs: ids read
+    once up front would freeze an under-count, even 0."""
     import uuid
 
     sc = spark.sparkContext
@@ -254,27 +260,30 @@ def measure_runtime_bytes(spark: SparkSession, action) -> int:
         action()
     finally:
         sc._jsc.clearJobGroup()
-    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    deadline = time.perf_counter() + 5.0
+    prev = None
+    while True:
+        bus.waitUntilEmpty(int(max(1.0, deadline - time.perf_counter()) * 1000))
+        stage_ids, running = group_stage_ids(spark, group)
+        cur = (stage_ids, _stages_input_bytes(spark, stage_ids))
+        if (cur == prev and not running) or time.perf_counter() > deadline:
+            return cur[1]
+        prev = cur
+        time.sleep(0.05)
+
+
+def group_stage_ids(spark: SparkSession, group: str) -> tuple[set[int], bool]:
+    """The stage ids of a job group's jobs, and whether any of them runs."""
+    tracker = spark.sparkContext.statusTracker()
     stage_ids: set[int] = set()
+    running = False
     for jid in tracker.getJobIdsForGroup(group):
         info = tracker.getJobInfo(jid)
         if info is not None:
             stage_ids.update(info.stageIds)
-    # the async listener bus delivers task-end events after the action
-    # returns: wait for two consecutive stable readings of the bounded sum
-    deadline = time.perf_counter() + 5.0
-    while time.perf_counter() < deadline and tracker.getActiveJobsIds():
-        time.sleep(0.1)
-    stable = 0
-    prev = _stages_input_bytes(spark, stage_ids)
-    while time.perf_counter() < deadline:
-        time.sleep(0.2)
-        cur = _stages_input_bytes(spark, stage_ids)
-        stable = stable + 1 if cur == prev else 0
-        if stable >= 2:
-            break
-        prev = cur
-    return prev
+            running = running or info.status == "RUNNING"
+    return stage_ids, running
 
 
 @dataclass

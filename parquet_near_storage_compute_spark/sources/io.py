@@ -14,11 +14,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def read_parquet(spark: SparkSession, path_or_glob: str) -> DataFrame:
-    """Directory, single file, or glob — S1-S3/S7/S8 are automatic."""
-    from parquet_near_storage_compute_spark.tables import ensure_engine_confs
+    """Directory, single file, or glob — S1-S3/S7/S8 are automatic. A
+    plain path is resolved once per session (``tables.resolve_parquet``)."""
+    from parquet_near_storage_compute_spark.tables import resolve_parquet
 
-    ensure_engine_confs(spark)
-    return spark.read.parquet(path_or_glob)
+    return resolve_parquet(spark, path_or_glob)
 
 
 def read_parquet_many(spark: SparkSession, paths: list[str]) -> DataFrame:

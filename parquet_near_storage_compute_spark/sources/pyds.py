@@ -411,6 +411,29 @@ class RowGroupParquetDataSource(DataSource):
         return RowGroupWriter(self.options, overwrite)
 
 
+def register_source(spark: SparkSession) -> None:
+    """Register ``rowgroup_parquet`` in ``spark`` unless it already is.
+
+    Spark checks a new name against the JVM's active session, which after
+    ``newSession()`` is still the parent: a child session of a parent that
+    registered the source would be refused with DATA_SOURCE_ALREADY_EXISTS.
+    ``spark`` is therefore made the active session while it registers."""
+    jss = spark._jsparkSession
+    name = RowGroupParquetDataSource.name()
+    if jss.sessionState().dataSourceManager().dataSourceExists(name):
+        return
+    jsession = spark._jvm.org.apache.spark.sql.SparkSession
+    prev = jsession.getActiveSession()
+    jsession.setActiveSession(jss)
+    try:
+        spark.dataSource.register(RowGroupParquetDataSource)
+    finally:
+        if prev.isDefined():
+            jsession.setActiveSession(prev.get())
+        else:
+            jsession.clearActiveSession()
+
+
 def sized_events_path(sf_dir: str) -> str:
     """Sorted, row-group-sized events copy for the contract (cached; keyed
     on the source parquet's mtime+size so corpus regeneration invalidates).
@@ -445,7 +468,7 @@ def python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     admit everything, exactly as in the reference's worst-case ladder)."""
     from pyspark.sql import functions as F
 
-    spark.dataSource.register(RowGroupParquetDataSource)
+    register_source(spark)
     # Off by default in 4.1; runtime-settable. Without it Spark refuses a
     # reader that implements pushFilters rather than silently skipping it.
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
@@ -482,7 +505,7 @@ def python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         _run_to_memory,
     )
 
-    spark.dataSource.register(RowGroupParquetDataSource)
+    register_source(spark)
     stream = (
         spark.readStream.format("rowgroup_parquet")
         .option("path", sized_events_path(sf_dir))
@@ -513,7 +536,7 @@ def python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from parquet_near_storage_compute_spark.tables import load_table, table_path
 
-    spark.dataSource.register(RowGroupParquetDataSource)
+    register_source(spark)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     src = table_path(sf_dir, "events")
     st = os.stat(src)

@@ -19,7 +19,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from parquet_near_storage_compute_spark.sources.io import write_csv
-from parquet_near_storage_compute_spark.tables import ensure_engine_confs
+from parquet_near_storage_compute_spark.tables import resolve_parquet
 
 _COPY_RE = re.compile(
     r"^\s*COPY\s*\(\s*(?P<body>.*)\s*\)\s*TO\s*'(?P<out>[^']+)'"
@@ -56,8 +56,7 @@ def translate_sql(
         if path not in views:
             views[path] = f"sql_file_view_{len(views)}"
             resolved = path if os.path.isabs(path) else os.path.join(base_dir, path)
-            ensure_engine_confs(spark)
-            spark.read.parquet(resolved).createOrReplaceTempView(views[path])
+            resolve_parquet(spark, resolved).createOrReplaceTempView(views[path])
         return views[path]
 
     sql = _PATH_TABLE_RE.sub(_sub, sql)

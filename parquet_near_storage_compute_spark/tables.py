@@ -5,9 +5,18 @@ Parquet footer, no catalog (``v1/src/main.rs:119-131``, ``v2/src/main.rs:101-113
 glob sources in ``datasets/snowset/query_selectivity_distribution.sql:10``).
 ``spark.read.parquet`` handles directories, globs and multi-file layouts
 natively and reads footers at planning time (SURVEY.md §2.1 S1-S3, S7-S8).
+
+Resolving a path lists its files and infers the schema from a footer in a
+one-task Spark job. ``resolve_parquet`` does that once per session and
+table: later calls reuse the resolved relation (see its docstring).
 """
 
 from __future__ import annotations
+
+import os
+import re
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,10 +69,84 @@ def ensure_engine_confs(spark: SparkSession) -> None:
             spark.conf.set(k, v)
 
 
+def path_fingerprint(path: str) -> tuple | None:
+    """``(name, mtime_ns, size)`` of a file, or of every file under a
+    directory of part files (names relative to it, in sorted order), so an
+    in-place rewrite is always visible. None when the path is missing."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((os.path.basename(path), st.st_mtime_ns, st.st_size),)
+        parts = []
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for name in sorted(files):
+                full = os.path.join(root, name)
+                st = os.stat(full)
+                parts.append(
+                    (os.path.relpath(full, path), st.st_mtime_ns, st.st_size)
+                )
+        return tuple(parts)
+    except OSError:
+        return None
+
+
+#: Resolved relations kept per process (LRU). Sized for one corpus's ten
+#: tables, the derived copies the contracts write next to it and the
+#: fixtures, plus a few test corpora; an entry is a schema and a file
+#: listing, and it keeps its session alive until evicted.
+_RESOLVED_CAP = 64
+_RESOLVED: OrderedDict[tuple, object] = OrderedDict()
+_RESOLVED_LOCK = threading.Lock()
+
+#: Hadoop glob characters or a URI scheme: such paths resolve uncached.
+_NOT_PLAIN_RE = re.compile(r"[*?\[{]|^[A-Za-z][A-Za-z0-9+.-]*:")
+
+
+def resolve_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, resolved once per session.
+
+    The first call lists the files and infers the schema (one Spark job);
+    later calls with the same key start no job. The key is the session
+    (``applicationId`` and ``id(spark)``), the path's realpath, its
+    ``path_fingerprint`` and the session's SQL confs, so a new or
+    restarted session, any rewrite of the files, or a conf that changes
+    how the path resolves (``spark.sql.sources.useV1SourceList`` picks the
+    relation type) resolves again. Each call returns a new instance of the
+    cached relation: the file listing and schema are shared, the column
+    ids are fresh, so two loads of one table still join like two tables.
+    Only a plain local file or directory is cached; globs, URIs and
+    missing paths go straight to ``spark.read.parquet``."""
+    ensure_engine_confs(spark)
+    real = os.path.realpath(path)
+    fp = None if _NOT_PLAIN_RE.search(path) else path_fingerprint(real)
+    if fp is None:
+        return spark.read.parquet(path)
+    confs = spark._jsparkSession.sessionState().conf().getAllConfs().toString()
+    key = (spark.sparkContext.applicationId, id(spark), real, fp, confs)
+    with _RESOLVED_LOCK:
+        hit = _RESOLVED.get(key)
+        if hit is not None:
+            _RESOLVED.move_to_end(key)
+    if hit is None:
+        df = spark.read.parquet(path)
+        # the JVM class is looked up once per entry: each py4j lookup of
+        # it costs more than building the Dataset
+        dataset = spark._jvm.org.apache.spark.sql.classic.Dataset
+        with _RESOLVED_LOCK:
+            _RESOLVED[key] = (df._jdf.logicalPlan(), dataset)
+            while len(_RESOLVED) > _RESOLVED_CAP:
+                _RESOLVED.popitem(last=False)
+        return df
+    relation, dataset = hit
+    return DataFrame(
+        dataset.ofRows(spark._jsparkSession, relation.newInstance()), spark
+    )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Footer-driven scan of one table (schema inferred, S1/S2 automatic)."""
-    ensure_engine_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = resolve_parquet(spark, table_path(sf_dir, name))
     for col in _NANOS_TS_COLS.get(name, ()):
         if isinstance(df.schema[col].dataType, T.LongType):
             # integer `div`, not `/`: epoch-nanos (~1.7e18) exceeds double's

@@ -28,7 +28,7 @@ def pytest_collection_modifyitems(config, items):
     VERDICT r12 #1: the driver's verify budget truncated the 3-seed
     suite; one-seed-per-contract keeps the shape coverage inside it."""
     for item in items:
-        if item.originalname != "test_contract_on_random_corpus":
+        if getattr(item, "originalname", None) != "test_contract_on_random_corpus":
             continue
         params = getattr(item, "callspec", None)
         if params is None:

@@ -16,11 +16,16 @@ from __future__ import annotations
 
 import datetime as _dt
 import math
+import re
 from typing import Any
 
 import duckdb
 
-from parquet_near_storage_compute_spark.tables import TABLES, table_path
+from parquet_near_storage_compute_spark.tables import (
+    TABLES,
+    path_fingerprint,
+    table_path,
+)
 
 
 def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -90,38 +95,38 @@ def _values_close(a: Any, b: Any) -> bool:
 #: The BPE-family oracles are generated unrolled-CTE chains that cost
 #: 30-60 s PER EVALUATION in DuckDB, and several suites evaluate the same
 #: oracle on the same corpus (test_registry_oracle + the family suites).
-#: The fingerprint covers the view definitions AND the mtime+size of every
-#: parquet path they reference, so a rewritten corpus at the same path
-#: invalidates the entry; results are deterministic given both.
+#: The fingerprint covers the view definitions AND the files behind every
+#: path they reference or the SQL itself quotes, so a rewritten corpus or
+#: fixture at the same path invalidates the entry; results are
+#: deterministic given both.
 _ORACLE_MEMO: dict[tuple, tuple[list[str], list[tuple]]] = {}
+
+#: a quoted path naming Parquet files; DuckDB stores a view's
+#: ``FROM 'x.parquet'`` with double quotes
+_PARQUET_PATH_RE = re.compile(r"""['"]([^'"]*\.parquet[^'"]*)['"]""")
 
 
 def _con_fingerprint(con: duckdb.DuckDBPyConnection, sql: str) -> tuple:
-    """Definitions + file stats of the views the SQL references (by name,
-    word-boundary). Keying on referenced views only lets two connections
-    with different UNREFERENCED view sets share an entry — the result
-    depends only on the referenced data."""
-    import os as _os
-    import re as _re
-
+    """Definitions of the views the SQL references (by name, word-boundary)
+    plus ``path_fingerprint`` of every quoted Parquet path in those
+    definitions and in the SQL itself (``read_parquet('...')``).
+    Keying on referenced views only lets two connections with different
+    UNREFERENCED view sets share an entry — the result depends only on the
+    referenced data."""
     views = tuple(
         v
         for v in con.execute(
             "SELECT view_name, sql FROM duckdb_views() "
             "WHERE NOT internal ORDER BY view_name"
         ).fetchall()
-        if _re.search(rf"\b{_re.escape(v[0])}\b", sql)
+        if re.search(rf"\b{re.escape(v[0])}\b", sql)
     )
-    stats = []
-    for _, vsql in views:
-        for p in _re.findall(r"'([^']+)'", vsql or ""):
-            base = p.split("*")[0].rstrip("/")
-            try:
-                st = _os.stat(base)
-                stats.append((p, st.st_mtime_ns, st.st_size))
-            except OSError:
-                stats.append((p, -1, -1))
-    return (views, tuple(stats))
+    paths = [p for _, vsql in views for p in _PARQUET_PATH_RE.findall(vsql or "")]
+    paths += _PARQUET_PATH_RE.findall(sql)
+    stats = tuple(
+        (p, path_fingerprint(p.split("*")[0].rstrip("/"))) for p in paths
+    )
+    return (views, stats)
 
 
 def _oracle_rows(

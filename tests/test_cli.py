@@ -6,6 +6,8 @@ import json
 import subprocess
 import sys
 
+import pytest
+
 LI = "/root/testdata/sf0.001/lineitem.parquet"
 
 
@@ -114,3 +116,25 @@ def test_columns_reference_width_on_wide92():
     )
     assert out.returncode == 2
     assert "outside --columns window" in out.stderr
+
+
+@pytest.mark.parametrize(
+    "bad", ["l_extendedprice >> 90000", "l_extendedprice > 9e4"]
+)
+def test_metadata_mode_rejects_a_conjunct_it_cannot_use(bad):
+    """Every conjunct either prunes or fails the run: a dropped one would
+    report unfiltered bytes as the filtered answer."""
+    out = subprocess.run(
+        [sys.executable, "-m", "parquet_near_storage_compute_spark.cli",
+         "--path", LI, "--mode", "metadata",
+         "--filter", f"l_quantity > 10 AND {bad}"],
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 2, out.stdout
+    assert out.stdout == ""
+    lines = out.stderr.strip().splitlines()
+    assert len(lines) == 1
+    assert bad in json.loads(lines[0])["error"]
+

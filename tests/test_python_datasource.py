@@ -352,3 +352,13 @@ def test_wal_floor_bounds_first_latest_offset_directly(tmp_path):
 
     bare = RowGroupStreamReader({"path": src, "maxGroupsPerBatch": "8"})
     assert bare.latestOffset() == {"rg": 28}  # full backlog — only safe reply
+
+
+def test_contract_in_a_new_session_of_a_registering_session(spark):
+    """A child of a session that registered the source builds the contract
+    too, with the same rows (Spark checks a new source name against the
+    active session, which is still the parent)."""
+    want = sorted(tuple(r) for r in python_datasource_scan(spark, SF).collect())
+    child = spark.newSession()
+    got = sorted(tuple(r) for r in python_datasource_scan(child, SF).collect())
+    assert got == want

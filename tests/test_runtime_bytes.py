@@ -90,3 +90,56 @@ def test_parquet_runtime_counter_invariants(spark, sf_dir):
             by_rung[rung],
         )
     assert by_rung["best_case"] <= by_rung["worst"]
+
+
+def test_counter_survives_a_lagging_job_start(spark, csv_copy, monkeypatch):
+    """The bytes returned the moment the action returns equal the group's
+    bytes read after the listener bus has gone quiet, even when the first
+    read of the group finds no job yet (its job-start event still queued).
+    Reading the job ids once, up front, froze that read: 0 bytes."""
+    import time
+
+    from parquet_near_storage_compute_spark.plans.metrics import (
+        _stages_input_bytes,
+        group_stage_ids,
+    )
+
+    sc = spark.sparkContext
+    groups: list[str] = []
+    set_group = sc.setJobGroup
+    real = sc.statusTracker()
+    first_read = [True]
+
+    class _LaggingTracker:
+        def getJobIdsForGroup(self, group):
+            if first_read[0]:
+                first_read[0] = False
+                return []
+            return real.getJobIdsForGroup(group)
+
+        def __getattr__(self, name):
+            return getattr(real, name)
+
+    monkeypatch.setattr(
+        sc, "setJobGroup", lambda g, *a, **k: (groups.append(g), set_group(g, *a, **k))
+    )
+    monkeypatch.setattr(sc, "statusTracker", _LaggingTracker)
+    schema = "l_orderkey bigint, l_quantity double, l_extendedprice double"
+    read = measure_runtime_bytes(
+        spark,
+        lambda: spark.read.schema(schema)
+        .option("header", True)
+        .csv(csv_copy)
+        .write.format("noop")
+        .mode("overwrite")
+        .save(),
+    )
+    monkeypatch.undo()
+    assert not first_read[0]
+
+    time.sleep(1.0)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    stage_ids, running = group_stage_ids(spark, groups[0])
+    settled = _stages_input_bytes(spark, stage_ids)
+    assert not running
+    assert read == settled > 0
